@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions._
 import graft.io.{Clients, Sources, TokenBucket}
-import graft.ops.{Normalize, Rank}
+import graft.ops.{Normalize, Scale}
 
 /** The crawler stage (SURVEY.md §3.1) as a declarative lineage:
   * deals -> date-window jobs (F2/F6) -> anti-join resume (J4) -> rate-limited
@@ -49,80 +49,87 @@ object Crawler {
   def resume(jobs: DataFrame, done: DataFrame): DataFrame =
     jobs.join(done, Seq("main_index"), "left_anti")
 
-  /** S2+S4: fetch each job's search URL under a per-partition token bucket
-    * and return (main_index, body). */
+  /** S2+S4: fetch each row's `urlCol` under a per-partition token bucket
+    * and return (main_index, `urlCol`, body).
+    *
+    * The rows are spread round-robin over `n` partitions and each
+    * partition holds a `globalRate / n` bucket. The cap bound of
+    * [[TokenBucket.perPartitionRate]] (`R*T + n` calls in any window T)
+    * assumes two things: the returned lineage is evaluated once (every
+    * evaluation builds fresh buckets, so k evaluations admit k times the
+    * budget), and the rows sit in those `n` partitions (a batch held by
+    * one partition would run at `R/n`). Consume the result once, or
+    * materialize it before a second use. The explicit width keeps AQE
+    * from coalescing the spread.
+    *
+    * `n` is the planned width of `jobs`, read without running it; when
+    * `jobs` carries an exchange its width is only known by running its
+    * query stages (which would evaluate `jobs`, and any fetch in it, an
+    * extra time), so `n` is then the cluster's task slots. Either way no
+    * more than `n` buckets exist, so the transient is at most `n`. */
   def fetchBodies(spark: SparkSession, jobs: DataFrame, urlCol: String,
       fetcher: Clients.Fetcher, globalRate: Double = GlobalRatePerSec): DataFrame = {
     import spark.implicits._
-    // partition count from the OPTIMIZED physical plan (queryExecution
-    // .toRdd) — `df.rdd` would build and cache a separate deserialized
-    // RDD lineage of the whole DataFrame just to read one number
-    val n = math.max(1, jobs.queryExecution.toRdd.getNumPartitions)
+    val n = math.max(1, Scale.plannedWidth(jobs)
+      .getOrElse(spark.sparkContext.defaultParallelism))
     val rate = TokenBucket.perPartitionRate(globalRate, n)
-    jobs.select(col("main_index"), col(urlCol).as("__url"))
+    jobs.select(col("main_index"), col(urlCol))
+      .repartition(n)
       .as[(Long, String)]
       .mapPartitions { rows =>
         lazy val bucket = new TokenBucket(rate)
         lazy val client = fetcher
         rows.map { case (idx, url) =>
           bucket.acquire()
-          (idx, client.fetch(url))
+          (idx, url, client.fetch(url))
         }
-      }.toDF("main_index", "body")
+      }.toDF("main_index", urlCol, "body")
   }
 
   /** S2 parse + J2: explode hits; entity-filter buckets fuzzy-matching
     * either company (partial_ratio > 90, CrawlerSupport.py:138-147) gate
     * the hits to those entities' CIKs (F15); jobs with no matching entity
     * fall back to the unfiltered hit list (CrawlerSupport.py:247-314).
-    * Archive URLs built (F16) and deduped (U2). */
+    * Archive URLs built (F16) and deduped (U2). The gate is computed per
+    * row, so the search fetch has a single consumer and runs once. */
   def candidateFilings(spark: SparkSession, jobs: DataFrame,
       fetcher: Clients.Fetcher = new Clients.StubFetcher): DataFrame = {
-    val bodies = fetchBodies(spark, jobs, "search_url", fetcher)
+    val parsed = fetchBodies(spark, jobs, "search_url", fetcher)
       .join(jobs.select(col("main_index"), col("norm_target"),
         col("norm_acquirer")), Seq("main_index"))
-      .withColumn("parsed", from_json(col("body"), Sources.edgarHitsSchema))
+      .select(col("main_index"), col("norm_target"), col("norm_acquirer"),
+        from_json(col("body"), Sources.edgarHitsSchema).as("parsed"))
 
     // J2 fuzzy entity gate: CIKs of entity buckets matching either name
-    val matchedCiks = bodies
-      .select(col("main_index"), col("norm_target"), col("norm_acquirer"),
-        explode(col("parsed.aggregations.entity_filter.buckets.key"))
-          .as("entity"))
-      .filter(
-        fuzz_partial_ratio(lower(col("entity")), col("norm_target")) > 90 ||
-        fuzz_partial_ratio(lower(col("entity")), col("norm_acquirer")) > 90)
-      .select(col("main_index"),
-        Sources.cikFromEntity(col("entity")).cast("long").as("cik"))
-      .distinct()
+    val matchedCiks = transform(
+      filter(col("parsed.aggregations.entity_filter.buckets.key"), e =>
+        fuzz_partial_ratio(lower(e), col("norm_target")) > 90 ||
+        fuzz_partial_ratio(lower(e), col("norm_acquirer")) > 90),
+      e => Sources.cikFromEntity(e).cast("long"))
 
-    val hits = bodies
-      .withColumn("total_hits", col("parsed.hits.total.value"))
-      .select(col("main_index"), explode(col("parsed.hits.hits")).as("hit"))
-      .select(col("main_index"), col("hit._source.ciks").as("ciks"),
-        col("hit._source.adsh").as("adsh"))
-      .withColumn("hit_cik", element_at(col("ciks"), -1).cast("long"))
-
-    val jobsWithMatch = matchedCiks.select("main_index").distinct()
-    val gated = hits
-      .join(matchedCiks.withColumnRenamed("cik", "hit_cik"),
-        Seq("main_index", "hit_cik"), "left_semi")
-    val fallback = hits
-      .join(jobsWithMatch, Seq("main_index"), "left_anti")
-    gated.unionByName(fallback)
+    parsed
+      .select(col("main_index"), matchedCiks.as("matched"),
+        explode(col("parsed.hits.hits")).as("hit"))
+      .select(col("main_index"), col("matched"),
+        col("hit._source.ciks").as("ciks"), col("hit._source.adsh").as("adsh"))
+      // no matching entity (empty or absent list): keep every hit
+      .filter(when(size(col("matched")) > 0,
+        array_contains(col("matched"), element_at(col("ciks"), -1).cast("long")))
+        .otherwise(true))
       .withColumn("url", Sources.filingUrl(col("ciks"), col("adsh")))
       .dropDuplicates("main_index", "url")
       .select(col("main_index"), col("url"))
   }
 
   /** S3 + F7-F13: fetch candidate docs, clean, and keep only docs whose
-    * 11k-char header probe contains both normalized names (J3).
-    * `globalRate` is the aggregate fetch cap (EDGAR's 5 req/s in
-    * production; hermetic tests pass a high rate). */
+    * 11k-char header probe contains both normalized names (J3). Each body
+    * keeps the URL it was fetched from, so a validated doc comes back once,
+    * under its own URL. `globalRate` is the aggregate fetch cap (EDGAR's
+    * 5 req/s in production; hermetic tests pass a high rate). */
   def validatedDocs(spark: SparkSession, candidates: DataFrame,
       names: DataFrame, fetcher: Clients.Fetcher,
       globalRate: Double = GlobalRatePerSec): DataFrame = {
     val bodies = fetchBodies(spark, candidates, "url", fetcher, globalRate)
-      .join(candidates, Seq("main_index"))
       .join(names, Seq("main_index"))
     val cleaned = bodies.withColumn("content",
       Normalize.cleanDocument(col("body")))

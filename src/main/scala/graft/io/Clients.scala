@@ -147,7 +147,9 @@ object Clients {
   /** X2 + J5 + O1: the Identifier stage — extracted sections -> LLM
     * structured extraction (mapPartitions, per-partition client) ->
     * from_json -> enum-checked 4-field record, sorted by index
-    * (src/identifier/InitiatorIdentifier.py:52-83,166). */
+    * (src/identifier/InitiatorIdentifier.py:52-83,166). The sort gathers
+    * the records (one short row per deal) into one partition: a range
+    * sort would sample its input first, which runs the LLM stage twice. */
   def identifyInitiators(spark: SparkSession, sections: DataFrame,
       llm: LlmExtractor = new StubLlmExtractor): DataFrame = {
     import spark.implicits._
@@ -165,7 +167,8 @@ object Clients {
         col("parsed.type_of_initiation").as("TYPE_OF_INITIATION"),
         col("parsed.stated_reasons").as("REASON"))
       .filter(col("TYPE_OF_INITIATION").isin(initiationTypes: _*))
-      .orderBy(col("INDEX"))
+      .repartition(1)
+      .sortWithinPartitions(col("INDEX"))
   }
 
   /** X3 integration: add an embedding column via a pluggable embedder,

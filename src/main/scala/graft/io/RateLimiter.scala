@@ -41,7 +41,13 @@ object TokenBucket {
     * waste `k*R/n` of budget — the documented trade vs the reference's
     * single Manager-shared bucket, TokenBucket.py:10-31, which a
     * shared-nothing executor model cannot replicate without a
-    * coordination service). CrawlerSpec asserts both bounds. */
+    * coordination service). CrawlerSpec asserts both bounds.
+    *
+    * The bound assumes what `Crawler.fetchBodies` arranges: the fetch
+    * lineage is evaluated ONCE (each evaluation builds fresh buckets, so
+    * k evaluations admit k times the budget), and the rows are spread over
+    * the `n` partitions the rate is divided by (rows held by fewer
+    * partitions stay under the cap but use only their share of it). */
   def perPartitionRate(globalRate: Double, numPartitions: Int): Double =
     globalRate / math.max(1, numPartitions)
 }

@@ -51,7 +51,10 @@ object Sinks {
     * rows (dynamic partition overwrite), reference patchabbrev $set. */
   def mergeUpdate(spark: SparkSession, path: String, indexCol: String,
       updates: DataFrame, updateCol: String): Unit = {
+    // `updates` is evaluated once: the bucket list and the merge both read
+    // this checkpoint, not a second run of the caller's lineage
     val touched = updates.withColumn("bucket", bucketCol(col(indexCol)))
+      .localCheckpoint()
     val bucketList = touched.select("bucket").distinct()
       .collect().map(_.getLong(0))
     val current = spark.read.parquet(path)
@@ -62,11 +65,10 @@ object Sinks {
       .withColumn(updateCol,
         when(col("__k").isNotNull, col("__v")).otherwise(col(updateCol)))
       .drop("__k", "__v")
-    // materialize BEFORE the overwrite commits: both `current` and
-    // (commonly) `updates` lazily scan `path`, and a task retried after
-    // the dynamic-overwrite commit would re-read replaced files.
-    // localCheckpoint cuts every live lineage to `path` first; its
-    // footprint is the touched buckets, not the table.
+    // materialize BEFORE the overwrite commits: `current` lazily scans
+    // `path`, and a task retried after the dynamic-overwrite commit would
+    // re-read replaced files. localCheckpoint cuts every live lineage to
+    // `path` first; its footprint is the touched buckets, not the table.
     // repartition BY BUCKET first when the patch is BROAD: without it
     // every shuffle task writes one file into every bucket it happens
     // to hold rows of — up to (tasks x touched buckets) small files
@@ -102,11 +104,20 @@ object Sinks {
       else if (spreadNarrow) merged.repartition(cores, col("bucket"))
       else merged)
         .localCheckpoint()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try materialized.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(path)
-    finally materialized.unpersist()
+    finally { release(materialized); release(touched) }
   }
+
+  /** Frees a `localCheckpoint()`ed frame's blocks. `Dataset.unpersist`
+    * only drops cache-manager entries; a checkpoint's blocks belong to the
+    * RDD under its `LogicalRDD` and stay until that RDD is collected. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ => checkpointed.unpersist()
+    }
 
   /** S9: ordered CSV with header (single file, reference output.csv /
     * outputUnion.csv shape). */

@@ -41,13 +41,19 @@ object Scale {
     * callers that KNOW their exchange-bearing frame is narrow decide
     * from their own metadata (Sinks.mergeUpdate keys on the touched-
     * bucket count and probes the pre-join scan instead). */
-  private[graft] def isUnderSplit(df: DataFrame, cores: Int): Boolean = {
+  private[graft] def isUnderSplit(df: DataFrame, cores: Int): Boolean =
+    plannedWidth(df).exists(_ * 2 <= cores)
+
+  /** The planned partition count of `df` when reading it is pure physical
+    * planning (an exchange- and subquery-free plan); `None` otherwise, as
+    * the probe would run the plan's query stages (see [[isUnderSplit]]). */
+  private[graft] def plannedWidth(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.catalyst.expressions.PlanExpression
     val plan = df.queryExecution.sparkPlan
     val probeSafe = !plan.exists(p => p.isInstanceOf[Exchange] ||
       p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
-    probeSafe && df.rdd.getNumPartitions * 2 <= cores
+    if (probeSafe) Some(df.rdd.getNumPartitions) else None
   }
 
   /** Key-clustered variant of [[spreadNarrowScan]] for narrow inputs

@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
+
+import graft.io.Clients
 
 class CrawlerSpec extends SparkSpec {
+  import CrawlerSpec._
   import spark.implicits._
 
   private def deals = Seq(
@@ -126,5 +130,91 @@ class CrawlerSpec extends SparkSpec {
     // a fortiori: far under what the GLOBAL cap admits in the window
     // (R*T + n transient) — skew under-uses quota, never exceeds it
     assert(admitted <= globalRate * (windowMs / 1000.0) + n)
+  }
+
+  test("each search and each candidate body is fetched exactly once") {
+    val searches = spark.sparkContext.longAccumulator("searches")
+    val bodies = spark.sparkContext.longAccumulator("bodies")
+    val fetcher = new CountingFetcher(searches, bodies)
+    val jobs = Crawler.searchJobs(deals)
+    val cands = Crawler.candidateFilings(spark, jobs, fetcher).collect()
+    assert(searches.value == 2, "one search call per job")
+    assert(bodies.value == 0)
+    val candDf = cands.toSeq.map(r => (r.getLong(0), r.getString(1)))
+      .toDF("main_index", "url")
+    Crawler.validatedDocs(spark, candDf,
+      jobs.select($"main_index", $"norm_target", $"norm_acquirer"),
+      fetcher, globalRate = 1e6).collect()
+    assert(bodies.value == cands.length, "one body call per candidate url")
+    assert(searches.value == 2)
+    // composed lazily, the crawl still fetches each url once
+    Crawler.validatedDocs(spark, Crawler.candidateFilings(spark, jobs, fetcher),
+      jobs.select($"main_index", $"norm_target", $"norm_acquirer"),
+      fetcher, globalRate = 1e6).collect()
+    assert(searches.value == 4 && bodies.value == 2 * cands.length,
+      s"lazily composed: ${searches.value - 2} searches, " +
+        s"${bodies.value - cands.length} bodies")
+  }
+
+  test("validatedDocs labels each body with its own url, once") {
+    val names = Seq((0L, "prime response", "chordiant software"))
+      .toDF("main_index", "norm_target", "norm_acquirer")
+    val (good, bad) = ("https://archive.test/a.htm", "https://archive.test/b.htm")
+    val fetcher = new EndToEndSpec.MapFetcher(Map(
+      good -> "<html><body><p>Merger of Prime Response with Chordiant Software</p></body></html>",
+      bad -> "<html><body><p>An unrelated filing</p></body></html>"))
+    val candidates = Seq((0L, good), (0L, bad)).toDF("main_index", "url")
+    val out = Crawler.validatedDocs(spark, candidates, names, fetcher,
+      globalRate = 1e6).collect()
+    assert(out.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((0L, good)))
+    assert(out.head.getString(2).contains("Chordiant Software"))
+  }
+
+  test("fetchBodies: every window T admits at most R*T + n calls, and a " +
+      "batch held by one partition is spread over all n") {
+    val globalRate = 6.0
+    val n = 3
+    // all 12 jobs sit in the first of 3 input partitions
+    val jobs = spark.sparkContext.parallelize(0 until n, n)
+      .flatMap(p => if (p == 0) (0L until 12L) else Nil)
+      .toDF("main_index")
+      .withColumn("url", concat(lit("https://archive.test/"), $"main_index"))
+    val stamps = spark.sparkContext.collectionAccumulator[java.lang.Long]("stamps")
+    val out = Crawler.fetchBodies(spark, jobs, "url", new StampingFetcher(stamps),
+      globalRate).collect()
+    assert(out.length == 12)
+    assert(out.forall(r => r.getString(2) == new Clients.StubFetcher().fetch(r.getString(1))))
+    val t = stamps.value.toArray(Array.empty[java.lang.Long]).map(_.longValue / 1e9).sorted
+    assert(t.length == 12, "one call per job")
+    // a closed window [t(i), t(j)] holds j - i + 1 calls; 20 ms of slack
+    // absorbs the gap between a token and its recorded timestamp
+    for (i <- t.indices; j <- i until t.length) {
+      val window = t(j) - t(i)
+      assert(j - i + 1 <= globalRate * (window + 0.02) + n,
+        s"${j - i + 1} calls in ${window}s exceed R*T + n")
+    }
+    // spread over 3 buckets of R/n each: 4 calls per partition, ~1.5 s;
+    // one partition alone would need 5.5 s
+    assert(t.last - t.head < 3.5, s"calls took ${t.last - t.head}s")
+  }
+}
+
+object CrawlerSpec {
+  /** Stub fetcher counting search and document calls on accumulators. */
+  class CountingFetcher(searches: LongAccumulator, bodies: LongAccumulator)
+      extends Clients.Fetcher {
+    override def fetch(url: String): String = {
+      if (url.contains("search-index")) searches.add(1) else bodies.add(1)
+      new Clients.StubFetcher().fetch(url)
+    }
+  }
+
+  /** Stub fetcher recording the time of every call. */
+  class StampingFetcher(stamps: CollectionAccumulator[java.lang.Long])
+      extends Clients.Fetcher {
+    override def fetch(url: String): String = {
+      stamps.add(System.nanoTime())
+      new Clients.StubFetcher().fetch(url)
+    }
   }
 }

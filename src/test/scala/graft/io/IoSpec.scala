@@ -21,7 +21,10 @@ class IoSpec extends SparkSpec {
     .toDF("doc_id", "content")
 
   test("X2 identifier stage: stub LLM -> from_json -> enum-checked record") {
-    val out = Clients.identifyInitiators(spark, sections).collect()
+    val calls = spark.sparkContext.longAccumulator("llm")
+    val out = Clients.identifyInitiators(spark, sections,
+      new IoSpec.CountingLlm(calls)).collect()
+    assert(calls.value == 3, "one LLM call per section")
     assert(out.length == 3)
     val r0 = out.head
     assert(r0.getLong(0) == 0L)
@@ -60,8 +63,21 @@ class IoSpec extends SparkSpec {
     val dir = tmp("merge")
     val df = (0L until 250L).map(i => (i, s"v0-$i")).toDF("main_index", "content")
     Sinks.writeBucketed(df, dir, "main_index")
+    val evals = spark.sparkContext.longAccumulator("updates")
     val updates = Seq((42L, "v1-42"), (137L, "v1-137")).toDF("main_index", "content")
-    Sinks.mergeUpdate(spark, dir, "main_index", updates, "content")
+      .as[(Long, String)].map { r => evals.add(1); r }.toDF("main_index", "content")
+    // the overwrite mode is set per write: session conf stays as it was
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val conf = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      Sinks.mergeUpdate(spark, dir, "main_index", updates, "content")
+      assert(spark.conf.get(key) == "static")
+    } finally conf.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(evals.value == 2, "each update row computed once")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted),
+      "no checkpoint outlives the call")
     val after = spark.read.parquet(dir)
     assert(after.filter($"main_index" === 42L).collect()
       .head.getAs[String]("content") == "v1-42")
@@ -142,5 +158,16 @@ class IoSpec extends SparkSpec {
     val rows = deals.orderBy($"main_index").collect()
     assert(rows.head.getAs[String]("target_name") == "Prime Response Inc")
     assert(rows.head.getAs[java.sql.Date]("announce_dt").toString == "2001-01-08")
+  }
+}
+
+object IoSpec {
+  /** Stub LLM counting its calls on an accumulator. */
+  class CountingLlm(calls: org.apache.spark.util.LongAccumulator)
+      extends Clients.LlmExtractor {
+    override def extract(prompt: String): String = {
+      calls.add(1)
+      new Clients.StubLlmExtractor().extract(prompt)
+    }
   }
 }
