@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints.release
+
 /** S5-S10: sinks and keyed access (SURVEY.md §2.1). The reference buckets
   * Mongo collections by `main_index // 100` (DatabaseHandler.py:24-34);
   * here that becomes `partitionBy("bucket")` parquet, which gives partition
@@ -109,15 +111,6 @@ object Sinks {
       .partitionBy("bucket").parquet(path)
     finally { release(materialized); release(touched) }
   }
-
-  /** Frees a `localCheckpoint()`ed frame's blocks. `Dataset.unpersist`
-    * only drops cache-manager entries; a checkpoint's blocks belong to the
-    * RDD under its `LogicalRDD` and stay until that RDD is collected. */
-  private def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-      case _ => checkpointed.unpersist()
-    }
 
   /** S9: ordered CSV with header (single file, reference output.csv /
     * outputUnion.csv shape). */

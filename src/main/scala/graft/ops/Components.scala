@@ -79,8 +79,7 @@ object Components {
     .toInt
 
   /** Run the round loop STATICALLY PLANNED at the derived width (r19,
-    * guide §1.2/§2.4 — the knnHnswWith descent treatment applied to the
-    * label rounds): inside a loop every frame is an eagerly
+    * guide §1.2/§2.4): inside a loop every frame is an eagerly
     * checkpointed LogicalRDD with exact stats and the loop's own
     * widths are row-derived, so adaptive planning has no decision left
     * to make — but it still charged one stage-job per exchange and

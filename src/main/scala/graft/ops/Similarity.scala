@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints.release
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — driver north star.
   *
@@ -754,7 +756,7 @@ object Similarity {
       .join(dead, Seq("tid"), "left_anti")
       .localCheckpoint() // never overwrite a path being read
     survivors.write.mode("overwrite").parquet(path)
-    survivors.unpersist()
+    release(survivors)
     fs.delete(tomb, true)
   }
 
@@ -782,7 +784,7 @@ object Similarity {
       touched.filterNot(alive).foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(path + s"/$partCol=$v"), true)
       }
-      survivors.unpersist()
+      release(survivors)
     }
     fs.delete(tomb, true)
   }
@@ -971,7 +973,8 @@ object Similarity {
     * dup mining vs exhaustive enumeration); the d5d gate's in-gate
     * REQUIRE pins their dedup-VERDICT agreement at >= 90%, which is
     * the quantity a dedup pipeline consumes. The decision is logged
-    * to stderr and to the Spark job description so it is visible in
+    * to stderr and to the description of the jobs this call runs (the
+    * caller's description is restored on return), so it is visible in
     * any event-log/plan review. `forceRoute` pins a branch for gates
     * and A/Bs; the n-driven default is the production path. */
   def semanticDedup(targets: DataFrame, dim: Int, minCos: Double,
@@ -983,9 +986,10 @@ object Similarity {
       .getOrElse(s"n=$n ${if (n < routeCutoff) "<" else ">="} cutoff=$routeCutoff")
     System.err.println(s"[graft.semanticDedup] route=$route ($why, " +
       s"anchors: bench/scale_curve_r17.json semdedup_vs_brute)")
-    targets.sparkSession.sparkContext
-      .setJobDescription(s"semanticDedup route=$route ($why)")
-    route match {
+    val sc = targets.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"semanticDedup route=$route ($why)")
+    try route match {
       case "brute" =>
         // spread the stream side of the all-pairs theta-join when the
         // input is an under-split scan — the O(n^2/2) cosine kernel
@@ -1011,7 +1015,7 @@ object Similarity {
       case other =>
         throw new IllegalArgumentException(
           s"semanticDedup: unknown route '$other' (brute|index)")
-    }
+    } finally sc.setJobDescription(callerDescription)
   }
 
   /** Per-target Voronoi cell over the gated IVF machinery (deterministic
@@ -1112,15 +1116,19 @@ object Similarity {
   //    (7^cap <= n < 7^(cap+1), so a dense id space holds < 7
   //    multiples of 7^cap), making the entry scan O(1) in the corpus —
   //    then per level a constant number of expand-and-prune hops (each
-  //    hop: beam JOIN adjacency, exact re-score, window top-b). Fixed
-  //    unrolls make the whole search replayable in the DuckDB twin
-  //    (the pagerank-iteration convention) — a while-converged loop
-  //    would not be. Depth (and so total hops) grows ~log_7 n.
+  //    hop: beam plus its members' adjacency lists, exact re-score,
+  //    top-b). Fixed unrolls make the whole search replayable in the
+  //    DuckDB twin (the pagerank-iteration convention) — a
+  //    while-converged loop would not be. Depth (and so total hops)
+  //    grows ~log_7 n.
   // Scale shape: the adjacency is (lvl, src, dst, cos) rows at rest,
-  // partitioned by lvl; each hop broadcasts the beam (queries x b rows)
-  // and equi-joins it against adjacency then targets — per-hop work is
-  // beam-bounded, never corpus-bounded. Recall is gated against the
-  // brute-force twin (knn_recall_hnsw) with the IVF-Lloyd floor.
+  // partitioned by lvl. A search loads the vectors and the searched
+  // levels' adjacency once as a broadcast in-memory graph and walks each
+  // query's hops inside a task (REPOSE's build-local, search-in-task
+  // shape): one Spark job, not one per hop, for holding the graph in
+  // memory (~50 MB of vectors plus ~3.7M edges at n = 200k, dim 64).
+  // Recall is gated against the brute-force twin (knn_recall_hnsw)
+  // with the IVF-Lloyd floor.
   //
   // PERSISTED STORE + MAINTENANCE (the knn_ivf_*/d3_index_* matrix
   // applied to the graph). Sidecars under the store root, every commit
@@ -1128,10 +1136,9 @@ object Similarity {
   // version-named dirs; two overlapping maintenance transactions
   // conflict loudly at the first commit):
   //   vectors   (tid, te, tn, lvl, home)  partitioned (lvl, home);
-  //                                       additive on append — entry
-  //                                       reads prune to lvl=top,
-  //                                       append candidate scans to
-  //                                       the batch's probed cells
+  //                                       additive on append; append
+  //                                       candidate scans prune to the
+  //                                       batch's probed cells
   //   adj       (lvl, src, dst, cos)      partitioned by lvl
   //   adjpatch  (lvl, src, dst, cos)      REPLACEMENT lists for srcs
   //                                       touched since the last build/
@@ -1212,13 +1219,14 @@ object Similarity {
   def hnswAdjacency(targets: DataFrame, dim: Int, nCells: Int = 16,
       m: Int = 8, nProbe: Int = 2): DataFrame =
     hnswAdjacencyWith(targets, ivfSeedCentroids(targets, nCells),
-      hnswCap(targets.count()), nCells, m, nProbe)
+      hnswCap(targets.count()), nCells, m, nProbe)._2
 
-  /** Construction under explicit centroids + depth — the shared kernel
-    * of build, append (frozen centroids), and compaction (retrained). */
+  /** Construction under explicit centroids + depth, the shared kernel of
+    * build and compaction: (node table, adjacency over it). The caller
+    * releases the checkpointed node table once the adjacency is read. */
   private def hnswAdjacencyWith(targets: DataFrame,
       cs: Array[Array[Float]], cap: Int, nCells: Int, m: Int,
-      nProbe: Int): DataFrame = {
+      nProbe: Int): (DataFrame, DataFrame) = {
     val pMax = hnswProbeWidth(cap, nProbe, nCells)
     val base = targets.select(col("tid"), col("te"),
         hnswLevel(col("tid"), cap).as("lvl"),
@@ -1259,9 +1267,9 @@ object Similarity {
           col("src").as("dst"), col("cos")))
       .repartition(col("lvl"), col("src"))
       .distinct()
-    bi.withColumn("rn", row_number().over(w))
+    (base, bi.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2 * m)
-      .select(col("lvl"), col("src"), col("dst"), col("cos"))
+      .select(col("lvl"), col("src"), col("dst"), col("cos")))
   }
 
   /** Top-`m` forward lists (src, dst, cos) from candidate pairs carrying
@@ -1278,10 +1286,10 @@ object Similarity {
   }
 
   /** Beam descent over a prebuilt layered adjacency. `targets` must
-    * carry (tid, te, lvl). Entry: the single best layer-`maxOcc` node
-    * per query — an exact scan of the top OCCUPIED layer (tiny by the
-    * cap rule; non-empty by construction whenever maxOcc is derived
-    * from the data). Then per level maxOcc-1..1: `hops1`
+    * carry (tid, te, lvl), one row per tid. Entry: the single best
+    * layer-`maxOcc` node per query — an exact scan of the top OCCUPIED
+    * layer (tiny by the cap rule; non-empty by construction whenever
+    * maxOcc is derived from the data). Then per level maxOcc-1..1: `hops1`
     * expand-and-prune hops at beam width `beam1`; level 0: `hops0`
     * hops at `beam0`. Every hop re-scores with the same fixed-point
     * cosine the final ranking uses, ties to the lowest tid — fully
@@ -1289,7 +1297,14 @@ object Similarity {
     * ranking only: mark-deleted nodes still route, the canonical HNSW
     * deletion. Returns (qid, rank, tid, cos); self-matches excluded at
     * the final ranking only (the query's own node is the best possible
-    * descent seed).
+    * descent seed). Output columns keep the types of `qid` and `tid`.
+    *
+    * Execution: `targets` and the searched levels' adjacency are read
+    * once into an in-memory [[HnswGraph]], broadcast, and each task
+    * walks the whole schedule per query row: one Spark job at any hop
+    * count. The driver and each executor hold the graph (about 50 MB
+    * of vectors plus 3.7M edges at n = 200k, dim 64), each task ~17
+    * bytes of scratch per node, until the result is checkpointed.
     *
     * Recall knob AT DEPTH: the r16 100x sweep
     * (bench/scale_curve_r16.json) measured base-layer knobs
@@ -1318,149 +1333,31 @@ object Similarity {
       adjacency: DataFrame, k: Int, maxOcc: Int, beam1: Int = 0,
       hops1: Int = 0, beam0: Int = 0, hops0: Int = 4,
       exclude: Option[DataFrame] = None,
-      keep: Option[DataFrame] = None,
-      hopsPerCheckpoint: Int = 0): DataFrame = {
+      keep: Option[DataFrame] = None): DataFrame = {
     val beam1Eff =
       if (beam1 > 0) beam1 else if (maxOcc >= 5) 4 * maxOcc else 24
     val hops1Eff = if (hops1 > 0) hops1 else 3
     val beam0Eff = if (beam0 > 0) beam0 else hnswBeam0Auto(maxOcc)
-    // ENTRY IDS FIRST, on the raw frame: for the indexed path `targets`
-    // is the (lvl, home)-partitioned vectors store, so the top-layer
-    // filter statically prunes to the (tiny) lvl=maxOcc partition at
-    // the scan instead of filtering a full materialization
-    val entryIds = targets.filter(col("lvl") === maxOcc)
-      .select(col("tid")).localCheckpoint()
-    // materialize once: every hop's re-score joins against the target
-    // vectors — without the cut each hop re-scans and re-norms them.
-    // (One corpus scan per QUERY BATCH is the local operating point; a
-    // standing 100 TB deployment amortizes it by bucketing the vector
-    // store on tid so beam re-scores become shuffle-free lookups.)
-    val t = targets.select(col("tid"), col("te"), col("lvl"),
-      scaledDot(col("te"), col("te")).as("tn")).localCheckpoint()
-    val q = broadcast(queries.select(col("qid"), col("qe"),
-      scaledDot(col("qe"), col("qe")).as("qn")))
-    // Hop plan shape (r18, guide §2.4): the candidate set is
-    // repartitioned by `qid` ONCE and three operators ride that single
-    // exchange — the (qid,tid) dedup aggregate (HashPartitioning(qid)
-    // satisfies ClusteredDistribution(qid,tid)), the broadcast joins
-    // (partitioning-preserving; `t` is a checkpointed frame with
-    // propagated stats, so the planner broadcasts it while it is small
-    // and falls back to a partitioned join at corpus scale), and the
-    // per-query top-width window. The former shape paid a distinct
-    // exchange on (qid,tid) PLUS a window exchange on (qid) per hop —
-    // measured 4 AQE stage-jobs per hop at gate scale, halved by this.
-    // Candidate SET and ranking order are unchanged, so every descent
-    // twin replays bit-identically.
-    // HOP EXCHANGE WIDTH FROM THE KNOWN CANDIDATE VOLUME (r19, guide
-    // §2.5): a hop's candidate set is bounded by construction — at most
-    // nQ x beamWidth x (2m+1) rows (every beam node expands to its
-    // <=2m neighbours plus itself) — so the exchange width is computed
-    // from that bound (~128k rows/task, the band where the per-task
-    // scoring work dwarfs task overhead) instead of letting AQE
-    // discover the same number with a stage-job per hop. One query
-    // batch at gate scale pins to 1-2 tasks; a 2k-query dedup sweep
-    // pins to ~17; a million-query production batch grows to the
-    // session width. nQ is one count of the (small, broadcast) query
-    // side, paid once per search.
-    val hopRowsPerTask = 128L * 1000
-    val sessionParH =
-      queries.sparkSession.sessionState.conf.numShufflePartitions
-    val nQ = queries.count()
-    def wHop(width: Int): Int = {
-      val rows = nQ * width * 17L
-      math.max(1L, math.min(sessionParH.toLong,
-        (rows + hopRowsPerTask - 1) / hopRowsPerTask)).toInt
-    }
-    // EXPLICIT scale-gated broadcasts for the static descent (r19): the
-    // non-adaptive scope below plans from static stats, and a
-    // checkpointed LogicalRDD reports the session default size — so the
-    // re-score join against t and the expansion join against the
-    // level's adjacency, which AQE used to convert to broadcasts at
-    // runtime, would degrade to session-wide sort-merge chains (three
-    // exchanges per hop, QProfile: 33-task SMJ stages over a few
-    // hundred rows). Broadcast t in the SHALLOW regime (maxOcc < 5 ⇔
-    // corpus ≲ 7^5 ≈ 17k vectors — single-digit MB at the pipeline's
-    // embedding widths; a deep corpus streams t exactly as before),
-    // and broadcast the beam side of the expansion join while
-    // nQ x beamWidth stays bounded (≤400k rows ≈ 10 MB of (qid, tid)
-    // pairs — the beam is width-bounded by construction, so this is a
-    // row-count fact, not a guess).
-    val tB = if (maxOcc < 5) broadcast(t) else t
-    // 32k rows: the per-hop driver-side hash build of a broadcast beam
-    // measured NET-NEGATIVE at 128k rows (d5d 4.0 -> 6.1 s isolated —
-    // ten 3 MB builds per search) and net-positive at the point-lookup
-    // scale (50 queries x 64 beam); the corpus-as-queries sweeps keep
-    // the shuffled expansion join
-    val beamSmall =
-      nQ * math.max(math.max(beam1Eff, beam0Eff), 1).toLong <= 32000L
-    def prune(cand: DataFrame, width: Int): DataFrame = {
-      val c = cand.repartition(wHop(width), col("qid")).distinct()
-      val scored = c.join(tB, Seq("tid")).join(q, Seq("qid"))
-        .withColumn("cos", scaledDot(col("qe"), col("te")).cast("double") /
-          sqrt((col("qn") * col("tn")).cast("double")))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("tid"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= width)
-        .select(col("qid"), col("tid"), col("cos"))
-    }
-    def hop(beamDf: DataFrame, lvl: Int, width: Int): DataFrame = {
-      val adjL = adjacency.filter(col("lvl") === lvl)
-        .select(col("src").as("tid"), col("dst"))
-      val beamKeyed = beamDf.select(col("qid"), col("tid"))
-      val expanded = beamKeyed.unionByName(
-        (if (beamSmall) broadcast(beamKeyed) else beamKeyed)
-          .join(adjL, Seq("tid"))
-          .select(col("qid"), col("dst").as("tid")))
-      prune(expanded, width)
-    }
-    // entry: exact argmax over the (tiny) top occupied layer
-    var beamDf = prune(q.select(col("qid")).crossJoin(entryIds), 1)
-    // localCheckpoint every `hopsPerCheckpoint` hops: the beam is tiny
-    // (queries x width rows) but an UNCUT multi-hop lineage compounds
-    // into one enormous fused plan whose optimization + codegen
-    // dominates the search (measured 4x the hop compute at sf0.1 when
-    // never cut) — the pagerank CheckpointEvery discipline applied at
-    // hop width. `hopsPerCheckpoint` sets the cut cadence; 0 = AUTO:
-    // the r16 CurveProbe A/B (fresh JVM, min-of-3, same store) measured
-    // per-hop cutting fastest at shallow depth (1x/cap 3: 3.51 s vs
-    // 3.68 s at cadence 2) but cadence 2 fastest once the descent is
-    // deep (20x/cap 5: 5.50 vs 5.97; 100x/cap 6: 9.24 vs 10.48, -12%)
-    // — each cut costs a materialization round-trip and hop count
-    // grows ~2 log_7 n, so the round-trip tax overtakes the fused-plan
-    // tax with depth. Cutting is plan surgery only: results are
-    // bit-identical at any cadence, so gates/twins are unaffected.
-    val cadence =
-      if (hopsPerCheckpoint > 0) hopsPerCheckpoint
-      else if (maxOcc >= 5) 2 else 1
-    var hopsSinceCut = 0
-    def cut(df: DataFrame): DataFrame = {
-      hopsSinceCut += 1
-      if (hopsSinceCut % cadence == 0) df.localCheckpoint()
-      else df
-    }
-    // DESCENT RUNS NON-ADAPTIVE (r19, guide §1.2/§2.4): every frame a
-    // hop touches is an eagerly checkpointed LogicalRDD with EXACT
-    // stats (t, adjacency, the beam cuts), the hop exchange width is
-    // computed above from the candidate bound, and per-qid skew is
-    // impossible (each query contributes at most width x (2m+1)
-    // candidate rows by construction) — so AQE has no decision left to
-    // improve, but each hop materialization still paid one stage-job
-    // per exchange PLUS re-broadcasts of t/q (broadcast reuse never
-    // crosses the per-hop queries): 54 driver jobs for 4.8 s of task
-    // time at gate scale, wall job-floor-bound. With adaptive planning
-    // off inside the descent scope each hop is ONE job. The final
-    // ranking is materialized inside the scope so the restored conf
-    // never leaks into a caller's lazy plan; results are bit-identical
-    // (plan surgery only).
-    val sess = queries.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.getOption(aqeKey)
-    sess.conf.set(aqeKey, "false")
+    val (levels, widths) = ((for (l <- maxOcc - 1 to 1 by -1;
+      _ <- 1 to hops1Eff) yield (l, beam1Eff)) ++
+      Seq.fill(hops0)((0, beam0Eff))).toArray.unzip
+    val spark = queries.sparkSession
+    val graph = spark.sparkContext.broadcast(HnswGraph.collect(targets,
+      adjacency, maxOcc, math.max(maxOcc, 1)))
+    val ansi = spark.sessionState.conf.ansiEnabled
     try {
-      for (l <- maxOcc - 1 to 1 by -1; _ <- 1 to hops1Eff)
-        beamDf = cut(hop(beamDf, l, beam1Eff))
-      for (_ <- 1 to hops0) beamDf = cut(hop(beamDf, 0, beam0Eff))
+      import spark.implicits._
+      val beamDf = Scale.spreadNarrowScan(queries.filter(col("qid").isNotNull)
+          .select(col("qid").cast("long"), col("qe")))
+        .as[(Long, Array[Float])].mapPartitions { rows =>
+          val g = graph.value
+          val walker = new g.Walker(levels, widths, ansi)
+          rows.flatMap { case (qid, qe) =>
+            walker.walk(qe).map { case (tid, cos) => (qid, tid, cos) } }
+        }
+        .select(col("_1").cast(queries.schema("qid").dataType).as("qid"),
+          col("_2").cast(targets.schema("tid").dataType).as("tid"),
+          col("_3").as("cos"))
       // FILTERED SEARCH is the keep side (the post-filter discipline:
       // out-of-predicate nodes still ROUTE — dropping them from the
       // beams would strand descents whose region is dense in filtered
@@ -1479,10 +1376,7 @@ object Similarity {
         .filter(col("rank") <= k)
         .select(col("qid"), col("rank"), col("tid"), col("cos"))
         .localCheckpoint()
-    } finally aqePrev match {
-      case Some(v) => sess.conf.set(aqeKey, v)
-      case None => sess.conf.unset(aqeKey)
-    }
+    } finally graph.destroy()
   }
 
   /** One pass over the corpus for (size, max UNCAPPED trailing-base-7
@@ -1502,12 +1396,10 @@ object Similarity {
       nCells: Int = 16, m: Int = 8, nProbe: Int = 2): DataFrame = {
     val (n, maxTz) = hnswCorpusStats(targets)
     val cap = hnswCap(n)
-    val tl = targets.select(col("tid"), col("te"),
-      hnswLevel(col("tid"), cap).as("lvl")).localCheckpoint()
-    knnHnswWith(queries, tl,
-      hnswAdjacencyWith(targets, ivfSeedCentroids(targets, nCells), cap,
-        nCells, m, nProbe).localCheckpoint(),
-      k, math.min(maxTz, cap))
+    val (nodes, adj) = hnswAdjacencyWith(targets,
+      ivfSeedCentroids(targets, nCells), cap, nCells, m, nProbe)
+    try knnHnswWith(queries, nodes, adj, k, math.min(maxTz, cap))
+    finally release(nodes)
   }
 
   private def hnswCentroidsDf(spark: org.apache.spark.sql.SparkSession,
@@ -1565,25 +1457,24 @@ object Similarity {
       .withColumn("lvl", hnswLevel(col("tid"), cap))
       .withColumn("home", nearestCell(col("te"), cs))
       .localCheckpoint()
-    val adj = hnswAdjacencyWith(targets, cs, cap, nCells, m, nProbe)
-    // vectors at rest partition by (lvl, home): the search's top-layer
-    // entry prunes to the lvl=maxOcc partition, and an append's
-    // candidate scan prunes to the batch's probed home cells — both
-    // reads become corpus-size-independent at the scan
+    val (nodes, adj) = hnswAdjacencyWith(targets, cs, cap, nCells, m, nProbe)
+    // vectors at rest partition by (lvl, home): an append's candidate
+    // scan prunes to the batch's probed home cells, corpus-size-
+    // independent at the scan
     // repartition ON the partition columns before the partitioned
     // write (the s8/mergeUpdate lesson): without it every one of the
     // session's tasks emits a file into every (lvl, home) dir it holds
     // rows of — up to tasks x (cap+1) x nCells tiny files, whose
     // per-file open cost then dominates every store scan (measured 4x
     // on the 20x search before this exchange)
-    val e1 = Sidecars.swapStaged(spark, path, "vectors",
+    val e1 = try Sidecars.swapStaged(spark, path, "vectors",
       expectedEpoch) { p =>
       vecs.repartition(col("lvl"), col("home"))
         .write.mode("overwrite").partitionBy("lvl", "home").parquet(p)
-    }
-    val e2 = Sidecars.swapStaged(spark, path, "adj", Some(e1)) { p =>
+    } finally release(vecs)
+    val e2 = try Sidecars.swapStaged(spark, path, "adj", Some(e1)) { p =>
       adj.write.mode("overwrite").partitionBy("lvl").parquet(p)
-    }
+    } finally release(nodes)
     val e3 = Sidecars.swap(spark, path, "centroids",
       hnswCentroidsDf(spark, cs), single = true, Some(e2))
     Sidecars.swap(spark, path, "meta",
@@ -1637,10 +1528,10 @@ object Similarity {
     * base-7 zeros lands on the top layer, and an entry with no
     * adjacency rows strands the whole descent at 1 row). The inverse
     * transient — patch rows naming not-yet-visible dst ids — is
-    * harmless by construction: every beam hop inner-joins candidates
-    * against the vectors store before scoring, so ghost dsts drop
-    * before ranking. Crash between the patch swap and the vector
-    * append leaves exactly those ghost links (searches degrade
+    * harmless by construction: the search keeps an edge only when
+    * both ends are in the vectors it read, so ghost dsts never score.
+    * Crash between the patch swap and the vector append leaves
+    * exactly those ghost links (searches degrade
     * gracefully, never starve); re-appending the SAME batch then
     * passes the overlap check and heals the store (touched lists are
     * recomputed and re-replaced). Crash after the vector append but
@@ -1857,9 +1748,9 @@ object Similarity {
     * NODES (adjpatch, then vectors, then meta), so a reader racing an
     * append can never pick an appended-but-unlinked vector as its
     * entry (the empty-beam trap) — the only transient it can observe
-    * is patch rows naming not-yet-visible dst ids, which drop
-    * harmlessly at the hop's inner score-join against the vectors
-    * store. Tombstoned ids route but never rank.
+    * is patch rows naming not-yet-visible dst ids, which the search
+    * drops harmlessly (it keeps an edge only when both ends are in the
+    * vectors store). Tombstoned ids route but never rank.
     *
     * Beam geometry (`beam1`/`hops1`/`beam0`/`hops0`) is caller-tunable
     * — defaults match [[knnHnswWith]]. Because filtered search and
@@ -1875,7 +1766,7 @@ object Similarity {
       path: String, queries: DataFrame, k: Int,
       targetFilter: Option[Column] = None, beam1: Int = 0,
       hops1: Int = 0, beam0: Int = 0, hops0: Int = 4,
-      autoWiden: Boolean = true, hopsPerCheckpoint: Int = 0): DataFrame = {
+      autoWiden: Boolean = true): DataFrame = {
     import graft.util.Sidecars
     val meta = Sidecars.read(spark, path, "meta").collect()(0)
     val n = meta.getLong(0)
@@ -1884,8 +1775,7 @@ object Similarity {
     // the unfiltered search would use
     val beam0Base = if (beam0 > 0) beam0 else hnswBeam0Auto(meta.getInt(2))
     val adj = hnswEffectiveAdj(spark, path)
-    val all = Sidecars.read(spark, path, "vectors")
-    val vectors = all.select(col("tid"), col("te"), col("lvl"))
+    val vectors = Sidecars.read(spark, path, "vectors")
     val dead = Sidecars.tryPath(spark, path, "tombs")
       .map(spark.read.parquet)
     // FILTERED SEARCH (the knn_ivf/lsh filtered convention applied to
@@ -1895,7 +1785,7 @@ object Similarity {
     // them from the beams would strand descents through filtered-dense
     // regions). The predicate reaches the parquet scan as a pushed
     // data filter when deriving the allowed-id set.
-    val keep = targetFilter.map(p => all.filter(p).select(col("tid")))
+    val keep = targetFilter.map(p => vectors.filter(p).select(col("tid")))
     val beam0Eff =
       if (!autoWiden || (keep.isEmpty && dead.isEmpty)) beam0Base
       else {
@@ -1915,7 +1805,6 @@ object Similarity {
           beam0Base.toLong * math.ceil(n.toDouble / allowed).toLong).toInt
       }
     knnHnswWith(queries, vectors, adj, k, meta.getInt(2), beam1, hops1,
-      beam0Eff, hops0, exclude = dead, keep = keep,
-      hopsPerCheckpoint = hopsPerCheckpoint)
+      beam0Eff, hops0, exclude = dead, keep = keep)
   }
 }

@@ -355,24 +355,6 @@ object CurveProbe {
       rows = got.count()
       search = math.min(search, (System.nanoTime() - t1) / 1e9)
     }
-    // checkpoint-cadence A/B (r15 verdict ask #7): the per-hop
-    // localCheckpoint is the documented fix for the fused-plan blowup,
-    // but each cut costs a materialization round-trip and depth grows
-    // ~log_7 n — measure cutting every 2nd hop (per level) and every
-    // 3rd against the default at this scale, same store, min-of-3
-    def searchAt(cadence: Int): Double = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 3) {
-        val t1 = System.nanoTime()
-        graft.ops.Similarity.knnHnswIndexed(spark, path, q, k = 5,
-            hopsPerCheckpoint = cadence)
-          .select(col("qid"), col("tid")).localCheckpoint().count()
-        best = math.min(best, (System.nanoTime() - t1) / 1e9)
-      }
-      best
-    }
-    val searchCk2 = searchAt(2)
-    val searchCk3 = searchAt(3)
     // recall@5 against the exact scan — the quality axis of the scale
     // point: deeper geometry must not trade recall for the growth win
     val bf = graft.ops.Similarity.knnBruteForce(q, t, k = 5)
@@ -396,8 +378,7 @@ object CurveProbe {
     val cap = graft.ops.Similarity.hnswCap(n)
     println(s"""{"query":"knn_hnsw","sf":"$dir","n":$n,""" +
       s""""n_cells":$nCells,"cap":$cap,"build_sec":$build,""" +
-      s""""search_sec":$search,"search_ckpt2_sec":$searchCk2,""" +
-      s""""search_ckpt3_sec":$searchCk3,"append100_sec":$append,""" +
+      s""""search_sec":$search,"append100_sec":$append,""" +
       s""""result_rows":$rows,""" +
       s""""recall_hits":$hits,"recall_possible":$possible}""")
   }

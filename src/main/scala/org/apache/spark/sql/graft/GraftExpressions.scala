@@ -20,6 +20,9 @@ import graft.expr.{DateShiftImpl, FuzzImpl, NfkcImpl, RecursiveSplitter}
 object internal {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Catalyst's ANSI `DIVIDE_BY_ZERO` error, for kernels outside it. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }
 
 abstract class FuzzBase extends BinaryExpression with ExpectsInputTypes {

@@ -740,17 +740,15 @@ class PlanSpec extends SparkSpec {
       "HNSW construction must never pair globally: " + p.take(1500))
     assert(p.contains("hashpartitioning(cell") || p.contains("[cell"),
       "per-level candidates must meet on the probe cell: " + p.take(1500))
-    // search through the persisted store: the per-hop adjacency read
-    // must prune to the hop's lvl partition at the scan
+    // the persisted store: a level filter on the at-rest adjacency must
+    // prune to that lvl partition at the scan
     val path = graft.util.TempDirs.create("hnsw-plan") + "/g"
     graft.ops.Similarity.writeHnswIndex(t, path, dim = 8, nCells = 8,
       m = 4)
     val q = t.limit(4).select(col("tid").as("qid"), col("te").as("qe"))
-    // each hop reads the at-rest adjacency filtered to ITS level — the
-    // lvl-partitioned layout must turn that into static partition
-    // pruning at the scan (the search itself checkpoints every beam,
-    // so the hop scans never appear in the final frame's plan — assert
-    // the pruning on the hop's scan shape directly)
+    // the lvl-partitioned layout must turn a level filter into static
+    // partition pruning at the scan (the search reads its levels once
+    // into memory, so assert the pruning on the scan shape directly)
     val hopScan = spark.read.parquet(
         graft.util.Sidecars.path(spark, path, "adj"))
       .filter(col("lvl") === 1)

@@ -187,8 +187,15 @@ class SimilaritySpec extends SparkSpec {
         (exact(qid) intersect got.getOrElse(qid, Set.empty)).size / 3.0)
       rs.sum / rs.size
     }
-    val hnsw = Similarity.knnHnsw(q, t, dim = 16, k = 3, nCells = 8)
-      .collect()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val ranked = Similarity.knnHnsw(q, t, dim = 16, k = 3, nCells = 8)
+    val rankedRdd = ranked.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet
+      .subsetOf(persisted + rankedRdd),
+      "a checkpoint other than the result outlives knnHnsw")
+    val hnsw = ranked.collect()
     val hnswRecall = recallOf(hnsw)
     val lloyd = Similarity.knnIvf(q, t, dim = 16, k = 3, nCells = 8,
       nProbe = 2, lloydIters = 2).collect()
@@ -653,7 +660,10 @@ class SimilaritySpec extends SparkSpec {
     val cleanBefore = before.filterNot(f =>
       touched.exists(c => f.getPath.contains(s"cell=$c")))
       .map(f => (f.getPath, f.lastModified)).sorted
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     Similarity.compactIvfIndex(spark, path)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted),
+      "compaction left its checkpoint persisted")
     assert(!new java.io.File(path + ".tombstones").exists())
     val after = parquetFiles(path)
     assert(after.size < before.size,
@@ -877,19 +887,86 @@ class SimilaritySpec extends SparkSpec {
       healed.patchRows == 0 && !healed.compactDue())
   }
 
-  test("HNSW checkpoint cadence is plan surgery only: search results " +
-      "are bit-identical at every hopsPerCheckpoint setting") {
+  /** Runs `f` with `onJob` called at every job start, every event
+    * delivered before it returns. */
+  private def onJobs[A](onJob: () => Unit)(f: => A): A = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = onJob()
+    }
+    org.apache.spark.graft.BusDrain(sc)
+    sc.addSparkListener(listener)
+    try { val out = f; org.apache.spark.graft.BusDrain(sc); out }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("HNSW search runs as many Spark jobs at 12 base hops as at 4, " +
+      "and the default search is the 4-hop one") {
     val t = embeddings.select($"vec_id".as("tid"), $"embedding".as("te"))
     val q = embeddings.filter($"vec_id" < 6)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val store = graft.util.TempDirs.create("hnsw-cadence") + "/g"
+    val store = graft.util.TempDirs.create("hnsw-jobs") + "/g"
     Similarity.writeHnswIndex(t, store, dim = 16, nCells = 8, m = 4)
-    val runs = Seq(0, 1, 2, 3).map { c =>
-      Similarity.knnHnswIndexed(spark, store, q, k = 3,
-        hopsPerCheckpoint = c).collect().map(_.toString).sorted.toSeq
+    def search(hops0: Int) = Similarity.knnHnswIndexed(spark, store, q,
+      k = 3, hops0 = hops0).collect().map(_.toString).sorted.toSeq
+    val twin = search(4)
+    def jobsAt(hops0: Int): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      onJobs(() => jobs.incrementAndGet())(search(hops0))
+      jobs.get
     }
-    assert(runs.distinct.size == 1,
-      "checkpoint cadence changed a search result")
+    val (at4, at12) = (jobsAt(4), jobsAt(12))
+    assert(at4 == at12, s"jobs grew with hops: $at4 at 4 hops, $at12 at 12")
+    assert(Similarity.knnHnswIndexed(spark, store, q, k = 3).collect()
+      .map(_.toString).sorted.toSeq == twin)
+  }
+
+  test("HNSW search leaves the session conf alone: every job of knnHnsw " +
+      "and knnHnswIndexed sees the session's AQE setting") {
+    val key = "spark.sql.adaptive.enabled"
+    val session = spark.conf.get(key)
+    val t = embeddings.select($"vec_id".as("tid"), $"embedding".as("te"))
+    val q = embeddings.filter($"vec_id" < 6)
+      .select($"vec_id".as("qid"), $"embedding".as("qe"))
+    val store = graft.util.TempDirs.create("hnsw-conf") + "/g"
+    Similarity.writeHnswIndex(t, store, dim = 16, nCells = 8, m = 4)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    onJobs(() => seen.add(spark.conf.get(key))) {
+      Similarity.knnHnsw(q, t, dim = 16, k = 3, nCells = 8).collect()
+      Similarity.knnHnswIndexed(spark, store, q, k = 3).collect()
+    }
+    assert(!seen.isEmpty)
+    assert(seen.toArray.forall(_ == session),
+      s"jobs saw $key = ${seen.toArray.distinct.mkString(",")}, " +
+        s"session has $session")
+  }
+
+  test("HNSW search fails a zero-norm query with the ANSI " +
+      "division-by-zero error") {
+    val t = embeddings.select($"vec_id".as("tid"), $"embedding".as("te"))
+    val q = Seq((0L, Array.fill(16)(0f))).toDF("qid", "qe")
+    val e = intercept[Exception](
+      Similarity.knnHnsw(q, t, dim = 16, k = 3, nCells = 8).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("DIVIDE_BY_ZERO")),
+      s"unexpected failure: $e")
+  }
+
+  test("semanticDedup restores the caller's job description on both " +
+      "routes") {
+    val t = embeddings.select($"vec_id".as("tid"), $"embedding".as("te"))
+    val sc = spark.sparkContext
+    for (route <- Seq("brute", "index"); caller <- Seq(null, "caller")) {
+      sc.setJobDescription(caller)
+      try {
+        Similarity.semanticDedup(t, dim = 16, minCos = 0.9,
+          forceRoute = Some(route)).collect()
+        assert(sc.getLocalProperty("spark.job.description") == caller,
+          s"route $route left the description " +
+            sc.getLocalProperty("spark.job.description"))
+      } finally sc.setJobDescription(null)
+    }
   }
 
   test("scaled-dot cosine matches double-precision cosine closely") {
